@@ -28,16 +28,19 @@ ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, ".perfbench")
 sys.path.insert(0, HERE)
 
-WORKLOADS = ("ep1_bulk", "ep1_resume_fine", "query_sweep")
+WORKLOADS = ("ep1_bulk", "query_sweep")
+
+# The sweep's tables: a copy of the engine's fixed sf0.01 test data (the
+# TPC-H-style tables plus documents and embeddings), the scale its DuckDB
+# oracles are checked at. The seed sets only the query order.
+SWEEP_DATA = os.path.join(HERE, "data", "sf0.01")
 
 # Sizes per scale. "full" is the benchmark; "tiny" is the self-test's.
 SIZES = {
-    "full": {"bulk-docs": 6000, "bulk-parts": 32, "resume-docs": 2000,
-             "resume-parts": 16, "companion-docs": 1000, "kernel-docs": 2000,
-             "sf": 0.005},
-    "tiny": {"bulk-docs": 400, "bulk-parts": 8, "resume-docs": 200,
-             "resume-parts": 8, "companion-docs": 200, "kernel-docs": 100,
-             "sf": 0.001},
+    "full": {"bulk-docs": 3000, "bulk-parts": 32, "companion-docs": 1000,
+             "kernel-docs": 2000},
+    "tiny": {"bulk-docs": 400, "bulk-parts": 8, "companion-docs": 200,
+             "kernel-docs": 100},
 }
 
 END_TO_END = {
@@ -254,24 +257,18 @@ def main():
     work = os.path.join(STATE, "work", run_id)
     os.makedirs(work)
     try:
-        data = os.path.join(work, "data")
-        if a.workload == "query_sweep" or a.trace:
-            import gen_tables
-            gen_tables.generate(data, a.seed, sizes["sf"])
-
         result_file = os.path.join(work, "result.json")
         trace_dir = os.path.join(STATE, "traces")
         os.makedirs(trace_dir, exist_ok=True)
         trace_file = os.path.join(trace_dir, f"{run_id}.json")
-        args = ["--mode", "run", "--workload", a.workload, "--seed", a.seed,
+        args = ["--workload", a.workload, "--seed", a.seed,
                 "--seconds", a.seconds, "--trace", a.trace, "--cores", cores(),
-                "--work", os.path.join(work, "jvm"), "--data", data, "--run-id", run_id,
+                "--work", os.path.join(work, "jvm"), "--data", SWEEP_DATA, "--run-id", run_id,
                 "--out", result_file, "--trace-file", trace_file, "--corrupt", a.corrupt,
                 "--families", ";".join(f"{f}={','.join(qs)}" for f, qs in FAMILIES.items())]
-        for k in ("bulk-docs", "bulk-parts", "resume-docs", "resume-parts",
-                  "companion-docs", "kernel-docs"):
-            args += [f"--{k}", sizes[k]]
-        log(f"{time.time() - start:.1f}s data ready, starting JVM")
+        for k, v in sizes.items():
+            args += [f"--{k}", v]
+        log(f"{time.time() - start:.1f}s built, starting JVM")
         run_jvm(classpath, work, args, deadline, "run.log")
         log(f"{time.time() - start:.1f}s JVM done")
         res = json.load(open(result_file))
@@ -283,7 +280,8 @@ def main():
             verify_dir = res["verify_dir"]
             if res.get("corrupt_query"):
                 oracle.drop_one_row(os.path.join(verify_dir, res["corrupt_query"]))
-            bad, rows = oracle.check(data, verify_dir, skip=set(res["verify_failed"]))
+            bad, rows = oracle.check(SWEEP_DATA, verify_dir, os.path.join(STATE, "oracle-cache"),
+                                     skip=set(res["verify_failed"]))
             log(f"{time.time() - start:.1f}s DuckDB gate done")
             failures += bad
             failed += len(bad)

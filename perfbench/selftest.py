@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
-"""Self-test of the benchmark, at tiny sizes (a few minutes on 4 cores).
+"""Self-test of the benchmark: EP1 at tiny sizes, the sweep on its fixed
+tables (about four minutes on 4 cores).
 
     python3 perfbench/selftest.py
 
 Checks that:
   - BENCHMARK.json names exactly the metrics run.py prints, with their units;
-  - every workload (ep1_resume_fine too) runs, passes its gates with
-    fail_frac = 0 and prints every end-to-end metric with its unit;
+  - every workload runs, passes its gates with fail_frac = 0 and prints
+    every end-to-end metric with its unit;
   - a traced run prints every per-layer metric and writes a trace file whose
     spans carry name, start, end, parent and run id;
-  - a corrupted output (one span dropped from the EP1 table, one row dropped
-    from a sweep query's result) fails the gate;
+  - a corrupted output (one span dropped from a seed-chosen partition of the
+    EP1 table, one row dropped from a sweep query's result) fails the gate;
   - run.py exits non-zero without a result where the engine sources are
     missing.
 """
@@ -56,7 +57,7 @@ def main():
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == run.PER_LAYER
-    assert {w["name"] for w in spec["workloads"]} <= set(run.WORKLOADS)
+    assert [w["name"] for w in spec["workloads"]] == list(run.WORKLOADS)
 
     for w in run.WORKLOADS:
         detail, res = result(bench(w))

@@ -3,16 +3,15 @@ package perfbench
 import graft.io.Synth
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import java.nio.file.{Files, Paths}
 
 /** The benchmark's JVM side. `run.py` starts it; it is never part of the
-  * engine. Modes:
-  *
-  *  - `setup`: build the session, run one trivial job, print the seconds
-  *    since `--t0-ms` (the launcher's clock at process start), exit.
-  *  - `run`: the same set-up, then one workload; raw measurements go to
-  *    `--out` as JSON.
+  * engine. It builds the session, runs one trivial job, runs one workload
+  * and writes the raw measurements to `--out` as JSON. Set-up time is
+  * counted from `--t0-ms`, the launcher's clock at process start.
   *
   * The session carries `graft.Main`'s settings, so the plans benched are
   * the plans production runs.
@@ -50,27 +49,19 @@ object BenchMain {
     Files.createDirectories(work)
     val spark = session(cores, work.toString)
     val setupS = (System.currentTimeMillis() - t0Ms) / 1e3
-    if (opt("mode") == "setup") {
-      println(Json.render(Map("setup_s" -> setupS)))
-      spark.stop()
-      return
-    }
 
     val ctx = RunContext(opt("workload"), opt("seed").toLong, opt("seconds").toInt,
       opt("trace") == "1", cores, work, opt("run-id"), opt.get("corrupt").contains("1"),
       Sweep.parseFamilies(opt("families")),
       m => System.err.println(f"[perfbench] ${(System.currentTimeMillis() - t0Ms) / 1e3}%.1fs $m"))
     def size(k: String): Int = opt(k).toInt
-    val bulk = Ep1Workload.Shape(size("bulk-docs"), size("bulk-parts"), 8, 0)
-    val resume = Ep1Workload.Shape(size("resume-docs"), size("resume-parts"), 1,
-      size("resume-parts") / 2)
     val data = opt("data")
 
     val controlBefore = graft.Bench.calibrationControl(cores)
     ctx.log(s"session ready after ${setupS}s; calibration control ${controlBefore}s")
     val res = ctx.workload match {
-      case "ep1_bulk" => Ep1Workload.run(spark, ctx, bulk)
-      case "ep1_resume_fine" => Ep1Workload.run(spark, ctx, resume)
+      case "ep1_bulk" =>
+        Ep1Workload.run(spark, ctx, Ep1Workload.Shape(size("bulk-docs"), size("bulk-parts"), 8))
       case "query_sweep" => Sweep.run(spark, ctx, data)
     }
     if (ctx.trace) {
@@ -78,7 +69,7 @@ object BenchMain {
       // not exercise come from a small companion run of the other kind
       val (c, companion) =
         if (ctx.workload == "query_sweep") {
-          val c = Ep1Workload.run(spark, ctx, Ep1Workload.Shape(size("companion-docs"), 8, 2, 0))
+          val c = Ep1Workload.run(spark, ctx, Ep1Workload.Shape(size("companion-docs"), 8, 2))
           (c, c.layers.filter { case (k, _) => !k.startsWith("spark.") && !k.startsWith("trace.") })
         } else {
           val c = new WorkloadResult
@@ -100,27 +91,27 @@ object BenchMain {
 
     val out = Map(
       "setup_s" -> setupS,
-      "op_seconds" -> res.opSeconds,
-      "query_seconds" -> res.querySeconds,
+      "op_seconds" -> res.opSeconds.toSeq,
+      "query_seconds" -> res.querySeconds.view.mapValues(_.toSeq).toMap,
       "attempted" -> res.attempted,
       "failed" -> res.failed,
-      "failures" -> res.failures.take(20),
+      "failures" -> res.failures.take(20).toSeq,
       "docs" -> res.docs,
       "spans_out" -> res.spansOut,
       "in_bytes" -> res.inBytes,
       "out_bytes" -> res.outBytes,
       "peak_rss_mb" -> peakRssMb(),
-      "layers" -> res.layers,
+      "layers" -> res.layers.toMap,
       "spark_version" -> spark.version,
       "java_version" -> System.getProperty("java.version"),
       "control_before_s" -> controlBefore,
-      "control_after_s" -> controlAfter) ++ res.extra
-    Files.writeString(Paths.get(opt("out")), Json.render(out))
+      "control_after_s" -> controlAfter) ++ res.extra.toMap
+    Files.writeString(Paths.get(opt("out")), Serialization.write(out)(DefaultFormats))
     res.traceSpans.foreach { tr =>
       Files.writeString(Paths.get(opt("trace-file")), tr.toJson(Map(
         "workload" -> ctx.workload, "seed" -> ctx.seed,
         "layer_self_s" -> tr.spans.map(_.name).distinct.map(n => n -> tr.self(n)).toMap,
-        "metrics" -> res.layers)))
+        "metrics" -> res.layers.toMap)))
     }
     spark.stop()
   }

@@ -32,14 +32,6 @@ object Fs {
     finally st.close()
   }
 
-  def copyTree(from: Path, to: Path): Unit = {
-    val st = Files.walk(from)
-    try st.iterator().asScala.foreach { f =>
-      val dst = to.resolve(from.relativize(f))
-      if (Files.isDirectory(f)) Files.createDirectories(dst) else Files.copy(f, dst)
-    } finally st.close()
-  }
-
   def sizeOf(p: Path): Long = if (!Files.exists(p)) 0L else {
     val st = Files.walk(p)
     try st.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum

@@ -15,9 +15,9 @@ import scala.jdk.CollectionConverters._
   * text, media_ref, offset) combined order-independently across rows. */
 final case class PartDigest(docs: Long, spans: Long, docHash: Long, spanHash: Long)
 
-/** The two EP1 production-job workloads. Both call `ExtractJob.runJob`
-  * exactly as `graft.Main run` does, on a corpus staged the way `graft.Main
-  * gen` stages it, and gate every commit batch against the declarative
+/** The EP1 production-job workload. It calls `ExtractJob.runJob` exactly as
+  * `graft.Main run` does, on a corpus staged the way `graft.Main gen` stages
+  * it, and gates every commit batch against the declarative
   * `ExtractJob.runExploded` form of the same input. */
 final class Ep1Bench(spark: SparkSession, work: Path, seed: Long) {
   private val cfg = Ep1Config()
@@ -50,34 +50,36 @@ final class Ep1Bench(spark: SparkSession, work: Path, seed: Long) {
     }.toMap
   }
 
-  /** Expected output per partition, from the independent Catalyst form. */
-  def expected(in: String): Map[Int, PartDigest] =
-    digest(ExtractJob.runExploded(spark.read.parquet(in), cfg))
+  /** Expected output per partition, from the independent Catalyst form
+    * over the whole input. */
+  def expected(in: String): Map[Int, PartDigest] = {
+    // digest reads its input twice; compute runExploded once
+    val df = ExtractJob.runExploded(spark.read.parquet(in), cfg).cache()
+    try digest(df) finally df.unpersist()
+  }
 
   def inputDocs(in: String): Map[Int, Long] =
     spark.read.parquet(in).groupBy(col("partition_id").cast("int")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
 
-  def bytesUnder(dir: String, parts: Set[Int]): (Long, Long) = {
+  /** (files, bytes) of the parquet files under `dir`. */
+  def parquetFiles(dir: String): (Long, Long) = {
     val root = java.nio.file.Paths.get(dir)
     if (!Files.exists(root)) return (0L, 0L)
     val st = Files.walk(root)
     try {
       val files = st.iterator().asScala.filter { f =>
-        Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet") &&
-          parts.exists(p => f.toString.contains(s"/partition_id=$p/"))
+        Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet")
       }.toSeq
       (files.length.toLong, files.map(Files.size).sum)
     } finally st.close()
   }
 
   /** Problems per partition in a committed output + lineage pair: every
-    * partition has its input's doc count and exactly one lineage row, the
-    * sampled partitions equal `runExploded`, and every partition equals
-    * `reference` when one is given. */
+    * partition equals `expected` (the `runExploded` digest) and has exactly
+    * one lineage row, and the lineage's docs_in sums to the input's docs. */
   def check(out: String, lin: String, docsIn: Map[Int, Long],
-      sample: Map[Int, PartDigest], reference: Option[Map[Int, PartDigest]])
-      : (Map[Int, PartDigest], Map[Int, String]) = {
+      expected: Map[Int, PartDigest]): (Map[Int, PartDigest], Map[Int, String]) = {
     val got = digest(spark.read.parquet(out))
     val lineage = spark.read.parquet(lin).collect().map(r =>
       (r.getAs[Int]("partition_id"), r.getAs[Long]("docs_in"))).toSeq
@@ -86,10 +88,8 @@ final class Ep1Bench(spark: SparkSession, work: Path, seed: Long) {
     docsIn.foreach { case (p, n) =>
       val g = got.get(p)
       if (!g.exists(_.docs == n)) bad(p) = s"partition $p output $g, input has $n docs"
-      else if (sample.get(p).exists(w => !g.contains(w)))
-        bad(p) = s"partition $p output $g != runExploded ${sample(p)}"
-      else if (reference.exists(m => m.get(p) != g))
-        bad(p) = s"partition $p output $g != reference ${reference.get.get(p)}"
+      else if (g != expected.get(p))
+        bad(p) = s"partition $p output $g != runExploded ${expected.get(p)}"
       val rows = perPart.getOrElse(p, Seq.empty)
       if (rows.length != 1) bad(p) = s"partition $p has ${rows.length} lineage rows"
     }
@@ -162,56 +162,39 @@ final class Ep1Bench(spark: SparkSession, work: Path, seed: Long) {
   }
 }
 
-/** Workload driver for `ep1_bulk` and `ep1_resume_fine`. */
+/** Workload driver for `ep1_bulk`. */
 object Ep1Workload {
-  final case class Shape(docs: Long, parts: Int, commitBatch: Int, preCommitted: Int)
-
-  /** Partitions gated against `runExploded` in each run (its plan costs
-    * ~4 s fixed plus ~3 ms per doc on 4 cores, too slow for the whole
-    * corpus in every run); the seed picks them. */
-  val SampledPartitions = 2
+  final case class Shape(docs: Long, parts: Int, commitBatch: Int)
 
   private def path(s: String) = java.nio.file.Paths.get(s)
 
   def run(spark: SparkSession, ctx: RunContext, shape: Shape): WorkloadResult = {
     val b = new Ep1Bench(spark, ctx.work, ctx.seed)
     val res = new WorkloadResult
-    // ---- set-up: stage, gate references, pre-committed state, warm-up
+    // ---- set-up: stage, the runExploded reference, warm-up
     val in = b.freshDir("in")
     b.stage(shape.docs, shape.parts, in)
     val docsIn = b.inputDocs(in)
-    val pendingParts = (shape.preCommitted until shape.parts).toSet
-    val batches = pendingParts.toSeq.sorted.grouped(shape.commitBatch).toSeq
-    val sampled = new scala.util.Random(ctx.seed).shuffle(pendingParts.toSeq.sorted)
-      .take(SampledPartitions)
-    val sampleDir = b.freshDir("sample")
-    sampled.foreach(p => Fs.copyTree(path(s"$in/partition_id=$p"), path(s"$sampleDir/partition_id=$p")))
-    val sample = b.expected(sampleDir)
-    val (_, inBytes) = b.bytesUnder(in, pendingParts)
-    val base = if (shape.preCommitted == 0) None else {
-      // a killed run: the first partitions committed by an earlier job
-      val half = b.freshDir("half")
-      (0 until shape.preCommitted).foreach(p =>
-        Fs.copyTree(path(s"$in/partition_id=$p"), path(s"$half/partition_id=$p")))
-      val (out, lin) = (b.freshDir("base-out"), b.freshDir("base-lin"))
-      ExtractJob.runJob(spark, half, out, lin, Ep1Config(), 8)
-      Some((out, lin))
-    }
-    // resume: the final table must equal an uninterrupted run's
-    var reference = base.map { _ =>
-      val (uo, ul) = (b.freshDir("full-out"), b.freshDir("full-lin"))
-      ExtractJob.runJob(spark, in, uo, ul, Ep1Config(), 8)
-      b.digest(spark.read.parquet(uo))
-    }
-    def prepare(): (String, String) = {
-      val (out, lin) = (b.freshDir("out"), b.freshDir("lin"))
-      base.foreach { case (bo, bl) => Fs.copyTree(path(bo), path(out)); Fs.copyTree(path(bl), path(lin)) }
-      (out, lin)
-    }
+    ctx.log("corpus staged")
+    val parts = (0 until shape.parts).toSet
+    val batches = (0 until shape.parts).grouped(shape.commitBatch).toSeq
+    val (_, inBytes) = b.parquetFiles(in)
+    // the self-test damages one seed-chosen partition
+    val victim = new scala.util.Random(ctx.seed).nextInt(shape.parts)
+    def prepare(): (String, String) = (b.freshDir("out"), b.freshDir("lin"))
     def job(out: String, lin: String): Double = {
       val t0 = System.nanoTime()
       ExtractJob.runJob(spark, in, out, lin, Ep1Config(), shape.commitBatch)
       (System.nanoTime() - t0) / 1e9
+    }
+    val expected = b.expected(in)
+    ctx.log("runExploded reference digested")
+    // warm-up: the timed operation twice, untimed (a single warm-up left
+    // the first timed job about 15% slower than the ones after it)
+    (1 to 2).foreach { _ =>
+      val (o, l) = prepare()
+      job(o, l)
+      Fs.rm(path(o)); Fs.rm(path(l))
     }
     /** Runs `f` (one timed operation) and gates its committed table;
       * returns the operation's seconds if it completed. */
@@ -220,15 +203,13 @@ object Ep1Workload {
       res.attempted += batches.length
       try {
         val t = f(out, lin)
-        if (corrupt) b.corrupt(out, pendingParts.min)
-        val (got, bad) = b.check(out, lin, docsIn, sample, reference)
+        if (corrupt) b.corrupt(out, victim)
+        val (got, bad) = b.check(out, lin, docsIn, expected)
         bad.values.take(3).foreach(m => res.failures += m)
         res.failed += batches.count(_.exists(bad.contains)) +
-          (if (bad.keySet.exists(p => !pendingParts.contains(p))) 1 else 0)
-        // later runs must reproduce the first gated table exactly
-        if (bad.isEmpty && reference.isEmpty) reference = Some(got)
-        res.spansOut = pendingParts.toSeq.flatMap(got.get).map(_.spans).sum.toDouble
-        val (files, bytes) = b.bytesUnder(out, pendingParts)
+          (if (bad.keySet.exists(p => !parts.contains(p))) 1 else 0)
+        res.spansOut = parts.toSeq.flatMap(got.get).map(_.spans).sum.toDouble
+        val (files, bytes) = b.parquetFiles(out)
         res.outBytes = bytes.toDouble
         res.filesOut = files.toDouble
         Some(t)
@@ -238,22 +219,18 @@ object Ep1Workload {
         None
       } finally { Fs.rm(path(out)); Fs.rm(path(lin)) }
     }
-    locally { // warm-up: the timed operation once, untimed
-      val (o, l) = prepare()
-      job(o, l)
-      Fs.rm(path(o)); Fs.rm(path(l))
-    }
     ctx.log(s"set-up done: ${shape.docs} docs, ${shape.parts} partitions, ${batches.length} batches")
 
-    res.docs = pendingParts.toSeq.map(docsIn).sum.toDouble
+    res.docs = docsIn.values.sum.toDouble
     res.inBytes = inBytes.toDouble
 
     if (!ctx.trace) {
       // ---- timed closed loop: one caller, one runJob at a time, started
-      // while the window lasts; a GC before each keeps earlier garbage out
+      // while the window lasts and at least three, so that wall_s is a
+      // median of three; a GC before each keeps earlier garbage out
       val t0 = System.nanoTime()
       var i = 0
-      while (i == 0 || (System.nanoTime() - t0) / 1e9 < ctx.seconds) {
+      while (i < 3 || (System.nanoTime() - t0) / 1e9 < ctx.seconds) {
         System.gc()
         attempt(ctx.corrupt && i == 0)(job).foreach(res.opSeconds += _)
         i += 1
@@ -290,7 +267,7 @@ object Ep1Workload {
       val wallL = (w1 - w0) / 1e3
       res.layers ++= Map(
         "tableio.pending_s" -> tr.self("TableIO.pendingPartitions"),
-        "tableio.pending_parts" -> pendingParts.size.toDouble,
+        "tableio.pending_parts" -> parts.size.toDouble,
         "tableio.write_s" -> tr.self("TableIO.writePartitioned"),
         "tableio.files_out" -> res.filesOut,
         "tableio.bytes_out" -> res.outBytes,

@@ -3,6 +3,8 @@ package perfbench
 import graft.SparkEntry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
@@ -120,7 +122,7 @@ object Sweep {
     val gated = pass(spark, ctx, data, 0, Some(outRoot), res)
     res.outBytes = Fs.sizeOf(Paths.get(outRoot)).toDouble
     val oracles = ctx.families.flatMap(_._2).map(q => q -> SparkEntry.oracleSql(q)).toMap
-    Files.writeString(Paths.get(s"$outRoot/oracle_sql.json"), Json.render(oracles))
+    Files.writeString(Paths.get(s"$outRoot/oracle_sql.json"), Serialization.write(oracles)(DefaultFormats))
     res.extra("verify_dir") = outRoot
     res.extra("verify_failed") = gated.collect { case (n, Left(_)) => n }
     if (ctx.corrupt) res.extra("corrupt_query") = gated.collectFirst { case (n, Right(_)) => n }

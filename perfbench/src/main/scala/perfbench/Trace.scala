@@ -5,6 +5,8 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import scala.collection.mutable
 
@@ -44,14 +46,14 @@ final class Tracer(val runId: String) {
   /** Self seconds of every span with this name, summed. */
   def self(name: String): Double = buf.filter(_.name == name).map(selfSeconds).sum
 
-  def toJson(extra: Map[String, Any]): String = Json.render(extra ++ Map(
+  def toJson(extra: Map[String, Any]): String = Serialization.write(extra ++ Map(
     "run_id" -> runId,
     "spans" -> buf.map { s =>
       Map("id" -> s.id, "name" -> s.name, "parent" -> s.parent,
         "run_id" -> s.runId,
         "start_s" -> (s.startNs - origin) / 1e9, "end_s" -> (s.endNs - origin) / 1e9,
         "self_s" -> selfSeconds(s), "overlap_s" -> s.overlapS, "counts" -> s.counts)
-    }))
+    }.toSeq))(DefaultFormats)
 }
 
 final case class Snap(jobs: Long, tasks: Long, cpuNs: Long, gcMs: Long,
