@@ -243,11 +243,4 @@ object Filters {
     else if (t == "$" || t == "$0.00" || t == "$ 0.00") Some("$0")
     else Some(t)
   }
-
-  def f8ScrubMoneyCol(v: Column): Column = {
-    val t = regexp_replace(v, "^\\p{javaWhitespace}+|\\p{javaWhitespace}+$", "")
-    when(v.isNull || t === "", lit(null).cast("string"))
-      .when(t === "$" || t === "$0.00" || t === "$ 0.00", lit("$0"))
-      .otherwise(t)
-  }
 }

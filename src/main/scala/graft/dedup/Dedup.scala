@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Normalized text used by every dedup flavor. */
-  def normText(text: Column): Column =
-    regexp_replace(trim(lower(text)), "\\s+", " ")
-
   // ------------------------------------------------------------ exact ------
   /** Exact dedup: group on the 60-bit fingerprint of normalized text; the
     * smallest id per group is canonical. Output: (id, canonical_id,
@@ -585,7 +581,13 @@ object Dedup {
       maxIters: Int = 20): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val fwd = pairs.select(col(idACol).as("__src"), col(idBCol).as("__dst"))
-    val edges = fwd.union(fwd.select(col("__dst").as("__src"), col("__src").as("__dst")))
+    val sym = fwd.union(fwd.select(col("__dst").as("__src"), col("__src").as("__dst")))
+    // symmetric edges plus a self-loop per id: one join then hands every id
+    // its neighbors' labels AND its own, so a round references the previous
+    // labels once. Two references per round (labels ∪ join(labels)) double
+    // the plan tree every round — its explain string alone exhausted a 7 GB
+    // heap on a 50-node graph.
+    val edges = sym.union(sym.select(col("__src"), col("__src").as("__dst")))
       .distinct().persist(lvl)
     var labels = edges.select(col("__src").as("__id")).distinct()
       .withColumn("__lbl", col("__id")).persist(lvl)
@@ -595,15 +597,8 @@ object Dedup {
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
-      val msgs = edges
-        .join(labels.select(col("__id").as("__src"), col("__lbl")), Seq("__src"))
-        // the probe null must carry the ID'S OWN type: ANSI union coercion
-        // widens (string, bigint) to BIGINT, so a long-typed null would
-        // cast string ids to numbers and throw on the first real doc id
-        .select(col("__dst").as("__id"), col("__lbl"),
-          lit(null).cast(edges.schema("__src").dataType).as("__self"))
-      // each id appears exactly once in `labels`, so min(__self) recovers
-      // the previous label inside the same aggregation — the convergence
+      // the self-loop row carries the previous label, so min over it
+      // recovers that label inside the same aggregation — the convergence
       // probe costs a filter on the already-shuffled result instead of a
       // separate join (halves the shuffles per round)
       // tracked at creation (not only on the success exit): if the loop
@@ -612,8 +607,10 @@ object Dedup {
       // complete unpersist their predecessor, and the registry prunes those
       // dead entries on the next track
       val next = graft.io.Persisted.track(
-        labels.withColumn("__self", col("__lbl")).union(msgs)
-          .groupBy("__id").agg(min("__lbl").as("__lbl"), min("__self").as("__old"))
+        edges.join(labels.select(col("__id").as("__src"), col("__lbl")), Seq("__src"))
+          .groupBy(col("__dst").as("__id"))
+          .agg(min("__lbl").as("__lbl"),
+            min(when(col("__src") === col("__dst"), col("__lbl"))).as("__old"))
           .persist(lvl))
       converged = next.filter(col("__lbl") =!= col("__old")).limit(1).count() == 0
       cached.unpersist()
@@ -699,7 +696,7 @@ object Dedup {
     // tree). Eager, so the round materializes here and the probe below is
     // a cheap scan of two cached sets. Blocks are dropped by unpersist()
     // each round; min-label [[connectedComponents]] doesn't need this
-    // because it references `labels` only twice per round (linear growth).
+    // because it references `labels` only once per round (linear growth).
     var edges = raw.filter(col("__src") =!= col("__dst"))
       .select(greatest(col("__src"), col("__dst")).as("__src"),
         least(col("__src"), col("__dst")).as("__dst"))

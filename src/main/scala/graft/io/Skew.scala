@@ -37,11 +37,14 @@ object Skew {
   /** Size-aware rebalance for per-row heavy stages: partition by
     * hash(size-magnitude, row discriminator) so giant rows scatter across
     * partitions instead of clustering by input order. No global sort — this
-    * stays a single shuffle and survives any scale. */
+    * stays a single shuffle and survives any scale.
+    *
+    * The key is hashed once, by the exchange itself. Hashing a precomputed
+    * `pmod(hash(…), n)` again would map the n small integers onto far fewer
+    * than n partitions (for n = 4, Murmur3 sends 0..3 to {3, 3, 2, 3}). */
   def rebalanceBySize(df: DataFrame, sizeExpr: Column, discriminator: Column,
       partitions: Int): DataFrame =
-    df.repartition(partitions,
-      pmod(hash(ceil(log2(greatest(sizeExpr, lit(1)))), discriminator), lit(partitions)))
+    df.repartition(partitions, ceil(log2(greatest(sizeExpr, lit(1)))), discriminator)
 
   /** Key-skew DIAGNOSIS — the report run BEFORE deciding whether a join or
     * groupBy needs the levers above (salting, AQE hints, a hot-key cap).

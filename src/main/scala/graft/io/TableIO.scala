@@ -11,8 +11,20 @@ import org.apache.spark.sql.functions._
   * a partition is idempotent, plus an append-only lineage/metrics table that
   * doubles as the commit log. A partition is "committed" iff it has a lineage
   * row; resume = left-anti join of all partitions against the lineage table.
+  *
+  * Both writes run with [[localFsOptions]]: `file:` paths go through
+  * [[NioLocalFileSystem]], which sets permissions in process instead of
+  * forking `chmod` per file and directory; other schemes are untouched.
   */
 object TableIO {
+
+  /** Per-write Hadoop options that route the `file` scheme to
+    * [[NioLocalFileSystem]]. Hadoop caches filesystems by scheme, so the
+    * cache is bypassed for these writes; the session's cached local FS is
+    * left as it is. */
+  private val localFsOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Write `df` partitioned by partition_id; existing partitions touched by
     * this write are replaced atomically-per-partition (dynamic overwrite),
@@ -20,15 +32,19 @@ object TableIO {
     */
   def writePartitioned(df: DataFrame, path: String): Unit =
     df.write
+      .options(localFsOptions)
       .partitionBy("partition_id")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
       .parquet(path)
 
+  /** Appends `rows` as one parquet file: one file per commit, not one per
+    * core. */
   def appendLineage(spark: SparkSession, rows: Seq[LineageRow], path: String): Unit = {
     import spark.implicits._
     if (rows.nonEmpty)
-      rows.toDS().write.mode(SaveMode.Append).parquet(path)
+      rows.toDS().coalesce(1).write.options(localFsOptions)
+        .mode(SaveMode.Append).parquet(path)
   }
 
   def readLineage(spark: SparkSession, path: String): Dataset[LineageRow] = {

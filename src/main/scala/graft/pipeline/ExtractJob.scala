@@ -7,7 +7,7 @@ import graft.model.{Doc, Kind, LineageRow}
 import graft.ranges.Islands
 import graft.segment.PageSegmenter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -202,37 +202,52 @@ object ExtractJob {
     * write with dynamic partition overwrite, append lineage rows. Partitions
     * are committed in batches of `commitBatch` so a killed run loses at most
     * one uncommitted batch and the rerun picks up exactly the pending ones.
+    *
+    * A batch runs one scan-and-rebalance job, one write job and one lineage
+    * append, with nothing cached. Its lineage counts are observed while the
+    * write runs: `docs_in` on the input side, before the rebalance, and
+    * `docs_out`/`spans_out` on the written rows. One counter per partition
+    * id of the batch keeps the observation bounded by `commitBatch`. A
+    * failed write throws before any lineage row is appended.
     */
   def runJob(spark: SparkSession, inputPath: String, outputPath: String,
       lineagePath: String, cfg: Ep1Config = Ep1Config(), commitBatch: Int = 8): Seq[LineageRow] = {
-    import spark.implicits._
     val input = spark.read.parquet(inputPath)
     val pending = TableIO.pendingPartitions(input, lineagePath)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val all = scala.collection.mutable.ArrayBuffer.empty[LineageRow]
     pending.grouped(commitBatch).foreach { batch =>
       val t0 = System.nanoTime()
+      val observedIn, observedOut = Observation()
+      val in = observePerPartition(input.filter(col("partition_id").isin(batch: _*)),
+        observedIn, batch, "docs_in" -> lit(1L))
       // size-aware rebalance: spread giant-doc skew across tasks before the
       // heavy tokenize/classify stage (hash of size-magnitude + doc id, no
       // global sort — one shuffle regardless of scale)
-      val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val docs = graft.io.Skew.rebalanceBySize(
-        input.filter(col("partition_id").isin(batch: _*)),
-        size(col("spans")), col("doc_id"), shufflePartitions)
+      val docs = graft.io.Skew.rebalanceBySize(in, size(col("spans")), col("doc_id"),
+        shufflePartitions)
       // row-based path: the job reads parquet, so the Doc-encoder
       // round-trip would be pure overhead here (see runRows scaladoc)
-      val outDf = runRows(docs, cfg).cache()
-      TableIO.writePartitioned(outDf, outputPath)
-      val stats = outDf.groupBy("partition_id")
-        .agg(count(lit(1)).as("docs"), sum(size(col("spans"))).as("spans"))
-        .collect()
+      val out = observePerPartition(runRows(docs, cfg), observedOut, batch,
+        "docs_out" -> lit(1L), "spans_out" -> size(col("spans")).cast("long"))
+      TableIO.writePartitioned(out, outputPath)
+      val (mIn, mOut) = (observedIn.get, observedOut.get)
       val wallMs = (System.nanoTime() - t0) / 1000000
-      val rows = stats.map(r => LineageRow(
-        r.getAs[Int]("partition_id"), r.getAs[Long]("docs"),
-        r.getAs[Long]("docs"), r.getAs[Long]("spans"), wallMs)).toSeq
+      def n(m: Map[String, Any], key: String) = m(key).asInstanceOf[Long]
+      val rows = batch.map(p => LineageRow(p, n(mIn, s"docs_in$p"),
+        n(mOut, s"docs_out$p"), n(mOut, s"spans_out$p"), wallMs))
       TableIO.appendLineage(spark, rows, lineagePath)
-      outDf.unpersist()
       all ++= rows
     }
     all.toSeq
+  }
+
+  /** Observes one sum per measure and partition id of `batch` on `df`,
+    * named measure + id. A sum over no rows is null, hence the coalesce. */
+  private def observePerPartition(df: DataFrame, obs: Observation, batch: Seq[Int],
+      measures: (String, Column)*): DataFrame = {
+    val sums = for ((name, v) <- measures; p <- batch)
+      yield coalesce(sum(when(col("partition_id") === p, v)), lit(0L)).as(s"$name$p")
+    df.observe(obs, sums.head, sums.tail: _*)
   }
 }

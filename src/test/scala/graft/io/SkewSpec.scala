@@ -34,6 +34,20 @@ class SkewSpec extends SparkTestBase {
     assert(rebalanced.count() == 800)
   }
 
+  test("size rebalance fills every partition evenly") {
+    for (n <- Seq(4, 8, 32)) {
+      val rows = 100 * n
+      // sizes over seven magnitudes: the key mixes the size bucket and the id
+      val df = (0 until rows).map(i => (s"doc_$i", 1 << (i % 7))).toDF("id", "sz")
+        .repartition(1)
+      val perPart = Skew.rebalanceBySize(df, col("sz"), col("id"), n)
+        .rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(perPart.length == n && perPart.sum == rows)
+      assert(perPart.min > 0, s"n=$n: empty partitions in ${perPart.toSeq}")
+      assert(perPart.max <= 2 * perPart.min, s"n=$n: uneven ${perPart.toSeq}")
+    }
+  }
+
   private def runSkew(keys: Seq[String]) =
     Skew.keySkew(keys.map(k => (k, 1)).toDF("k", "v"), Seq("k"))
       .as[(Long, Long, Long, Long, Long, Long, String)].collect().head

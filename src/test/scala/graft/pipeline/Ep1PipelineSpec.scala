@@ -183,4 +183,45 @@ class Ep1PipelineSpec extends SparkTestBase {
     // third run: nothing pending, nothing rewritten
     assert(ExtractJob.runJob(spark, in, out, lin, commitBatch = 3).isEmpty)
   }
+
+  test("runJob lineage: docs_in from the input, spans_out from the output, one file per batch") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, size, sum}
+    val dir = Files.createTempDirectory("graft_lineage").toString
+    val in = s"$dir/in"; val out = s"$dir/out"; val lin = s"$dir/lineage"
+    Synth.generate(spark, 90, nPartitions = 7).toDF()
+      .write.partitionBy("partition_id").parquet(in)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+    val rows = ExtractJob.runJob(spark, in, out, lin, commitBatch = 3)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- persisted).isEmpty,
+      "runJob left a persisted RDD behind")
+
+    def perPartition(path: String) = spark.read.parquet(path).groupBy("partition_id")
+      .agg(count(lit(1)), sum(size(col("spans"))).cast("long"))
+      .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val input = perPartition(in)
+    val written = perPartition(out)
+    val lineage = TableIO.readLineage(spark, lin).collect().sortBy(_.partition_id).toSeq
+    assert(lineage.map(_.partition_id) == (0 until 7))
+    assert(rows.sortBy(_.partition_id) == lineage)
+    for (r <- lineage) {
+      assert(r.docs_in == input(r.partition_id)._1, s"docs_in of ${r.partition_id}")
+      assert(r.docs_out == written(r.partition_id)._1, s"docs_out of ${r.partition_id}")
+      assert(r.spans_out == written(r.partition_id)._2, s"spans_out of ${r.partition_id}")
+    }
+    // 7 partitions in batches of 3: three commits, one lineage file each
+    val files = new java.io.File(lin).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files == 3)
+  }
+  test("runJob: a failed write appends no lineage row") {
+    val dir = Files.createTempDirectory("graft_failed_write")
+    val in = s"$dir/in"; val lin = s"$dir/lineage"
+    Synth.generate(spark, 20, nPartitions = 2).toDF()
+      .write.partitionBy("partition_id").parquet(in)
+    // the output path is a regular file, so the write cannot create it
+    val out = Files.writeString(dir.resolve("out"), "not a table").toString
+    intercept[Exception](ExtractJob.runJob(spark, in, out, lin, commitBatch = 1))
+    assert(!TableIO.exists(spark, lin))
+  }
 }
